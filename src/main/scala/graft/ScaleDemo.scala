@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** 100x-scale local demonstration (recorded in BASELINE.md's
@@ -57,15 +57,8 @@ object ScaleDemo {
     def in(ps: String*): Boolean = ps.contains(phase)
     // phases that read the log fleet (and so may need to generate it)
     val needsLogs = in("all", "fleet", "stream", "profile")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(defaultCpus = 32)
+    val cpus = spark.sparkContext.defaultParallelism
 
     def time[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -93,7 +86,7 @@ object ScaleDemo {
       time(s"generate $nLogs logs") {
         // executors write the files: the rewrite is embarrassingly
         // parallel and the fixture is re-read once per partition
-        spark.range(nLogs.toLong).repartition(cpus.toInt)
+        spark.range(nLogs.toLong).repartition(cpus)
           .foreachPartition { it: java.util.Iterator[java.lang.Long] =>
             val text = new String(Files.readAllBytes(Paths.get(src)), "UTF-8")
             it.forEachRemaining { iL =>
@@ -128,7 +121,7 @@ object ScaleDemo {
             .withColumn("user_id",
               col("user_id") + col("k") * maxUser)
             .drop("k")
-            .repartition(cpus.toInt)
+            .repartition(cpus)
             .write.mode(SaveMode.Overwrite).parquet(evParquet.toString)
         }
       }
@@ -156,7 +149,7 @@ object ScaleDemo {
                 expr("slice(words, 1, r)")))))
           .withColumn("doc_id", col("doc_id") * copies + col("k"))
           .drop("k", "words", "r")
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode(SaveMode.Overwrite).parquet(docsParquet.toString)
       }
     }
@@ -941,7 +934,7 @@ object ScaleDemo {
             "transform(embedding, (x, i) -> " +
               "CAST(x + IF(i = 0, k * 1e-4, 0D) AS FLOAT))"))
           .drop("k")
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode(SaveMode.Overwrite).parquet(embParquet.toString)
       }
     }
@@ -1023,7 +1016,7 @@ object ScaleDemo {
         queries.VectorOps.kmFinalAssign(spark, docsDir.toString)
           .select(col("vec_id"), col("embedding"),
             col("cluster").cast("int").as("label"))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode(SaveMode.Overwrite)
           .parquet(ivfDir.resolve("embeddings.parquet").toString)
       }

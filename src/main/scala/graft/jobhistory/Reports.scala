@@ -1,6 +1,7 @@
 package graft.jobhistory
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's four report surfaces + the python bytes report
@@ -12,10 +13,14 @@ import org.apache.spark.sql.functions._
   * BigDecimals — i.e. `(f_ms - s_ms) DIV scale`. The two differ by ±1
   * (proof: vis/grap/map.d:1 elapsed 8843 ≠ 1289551128-1289542284).
   *
-  * Scale notes: every join here is keyed on task/attempt id and the
-  * right sides (finals, attempt times) are task-cardinality — at 100 TB
-  * (many logs) these become co-partitioned shuffle joins on the same
-  * key, and the single-row `bounds` scalar is broadcast (J5).
+  * Task-level joins are keyed on task/attempt id, with task-cardinality
+  * right sides (finals, attempt times); job bounds are always broadcast
+  * (J5).
+  *
+  * The job-level reports (summary, interval classification, spine,
+  * both timelines) are each written once over a [[Grouping]]: the
+  * single-log entry points run them with [[Single]], the fleet ones
+  * with [[PerJob]].
   */
 object Reports {
 
@@ -37,19 +42,14 @@ object Reports {
     * vis/grap/reduce.d carries the legacy 6 columns (drop
     * maps_complete). shuffle_finish is the *final attempt's*
     * SHUFFLE_FINISHED (J1: task ⋈ finalAttempt ⋈ attempt times). */
-  def reduceDetails(v: JobHistoryViews): DataFrame = {
-    val shuffleOfFinal = v.finalAttempts
-      .join(v.reduceAttemptTimes.select(col("attempt_id"), col("shuffle_u")),
-        Seq("attempt_id"))
-      .select(col("task_id"), col("shuffle_u"))
+  def reduceDetails(v: JobHistoryViews): DataFrame =
     detailsBase(v.reduceTasks, v.scale)
-      .join(shuffleOfFinal, Seq("task_id"), "left")
+      .join(shuffleOfFinal(v), Seq("task_id"), "left")
       .crossJoin(broadcast(allMapsComplete(v)))
       .select(col("task_id"), col("start_time"), col("maps_complete"),
         col("shuffle_u").as("shuffle_finish"), col("end_time"),
         col("elapsed"), col("num_attempts"))
       .orderBy(col("task_id"))
-  }
 
   private def detailsBase(tasks: DataFrame, scale: Long): DataFrame = {
     val s = col("attrs").getItem("START_TIME").cast("long")
@@ -68,53 +68,13 @@ object Reports {
       max(expr(s"CAST(attrs['FINISH_TIME'] AS BIGINT) DIV ${v.scale}")),
       lit(0L)).as("maps_complete"))
 
-  /** `-s` overview statistics as one typed row (bin/job_history:380-424;
-    * golden scalars README:25-28). Averages are fractional (Groovy
-    * BigDecimal division). */
-  def summary(v: JobHistoryViews): DataFrame = {
-    val scale = v.scale
-    def ms(k: String): Column = col("attrs").getItem(k).cast("long")
-    val elapsed = ((ms("FINISH_TIME") - ms("START_TIME")) / scale).cast("long")
-    val finished = ms("FINISH_TIME").isNotNull
-
-    val maps = v.mapTasks.agg(
-      count(when(finished, 1)).as("num_maps"),
-      sum(when(finished, elapsed)).as("total_map_time"),
-      max(when(finished, expr(s"CAST(attrs['FINISH_TIME'] AS BIGINT) DIV $scale")))
-        .as("all_maps_complete"))
-
-    // totalShuffleTime += (long)(shuffle_u - START_TIME/scale): the
-    // reference subtracts an exact quotient from the already-truncated
-    // attempt unit, then truncates — ≡ (shuffle_u*scale - start_ms) DIV scale.
-    val shuffleOfFinal = v.finalAttempts
+  /** (task_id, shuffle_u) of each task's final reduce attempt. Unique
+    * per task, so a left join onto tasks never multiplies rows. */
+  private def shuffleOfFinal(v: JobHistoryViews): DataFrame =
+    v.finalAttempts
       .join(v.reduceAttemptTimes.select(col("attempt_id"), col("shuffle_u")),
         Seq("attempt_id"))
       .select(col("task_id"), col("shuffle_u"))
-    val reduces = v.reduceTasks
-      .join(shuffleOfFinal, Seq("task_id"), "left")
-      .agg(
-        count(when(finished, 1)).as("num_reduces"),
-        sum(when(finished, elapsed)).as("total_reduce_time"),
-        sum(when(finished,
-          ((col("shuffle_u") * scale - ms("START_TIME")) / scale).cast("long")))
-          .as("total_shuffle_time"))
-
-    v.job.select(
-      col("attrs").getItem("JOBID").as("job_id"),
-      col("attrs").getItem("JOBNAME").as("job_name"),
-      col("attrs").getItem("USER").as("user"),
-      col("attrs").getItem("JOB_STATUS").as("job_status"),
-      ((ms("FINISH_TIME") - ms("LAUNCH_TIME")) / scale).cast("long")
-        .as("total_time"))
-      .crossJoin(broadcast(maps))
-      .crossJoin(broadcast(reduces))
-      .withColumn("avg_map_time",
-        col("total_map_time").cast("double") / col("num_maps"))
-      .withColumn("avg_shuffle_time",
-        col("total_shuffle_time").cast("double") / col("num_reduces"))
-      .withColumn("avg_reduce_time",
-        col("total_reduce_time").cast("double") / col("num_reduces"))
-  }
 
   /** The python-surface reduce-output-bytes report
     * (bin/job_history.py:106-113): per reduce task with counters, HDFS
@@ -134,268 +94,197 @@ object Reports {
         (col("end_u") - col("submit_u")).as("reduce_finish"))
       .orderBy(col("task_id"))
 
-  // ----------------------------------------------------- multi-log (fleet)
+  // ------------------------------------------------------------ grouping
 
   /** Derive the owning job id from a task/attempt id — Hadoop ids embed
     * it (`task_<ts>_<seq>_m_000000` → `job_<ts>_<seq>`), so a directory
     * of many job logs analyzes in one pass with every aggregation keyed
-    * by (job_id, …). This is the 100 TB shape: one splittable scan over
-    * the fleet's logs, shuffles keyed on ids that already contain the
-    * job — no per-file driver loop. */
+    * by (job_id, …), with no per-file driver loop. */
   private[jobhistory] def jobIdOf(taskId: Column): Column =
     regexp_replace(taskId, "^(?:task|attempt)_([0-9]+_[0-9]+).*", "job_$1")
 
+  /** How the job-level reports group records into jobs. Reports written
+    * over a grouping prefix their output with [[keys]]. */
+  private[jobhistory] sealed abstract class Grouping(val keys: Seq[String]) {
+    /** Group key of the Job records. */
+    def jobKey: Seq[Column]
+    /** Group key of a task or attempt relation, from its id column. */
+    def key(id: Column): Seq[Column]
+    def bounds(v: JobHistoryViews): DataFrame
+    /** `df` with its job's bounds (`submit_u`, `finish_u`) attached. */
+    def withBounds(df: DataFrame, v: JobHistoryViews): DataFrame
+    /** `jobs` left-joined to a per-group aggregate of the same key. */
+    def joinAgg(jobs: DataFrame, agg: DataFrame): DataFrame
+  }
+
+  /** The whole log is one job: global aggregates (exactly one row, even
+    * over no records) and the one-row bounds as a broadcast cross join.
+    * Ids are never parsed, so any ids and logs without a Job record
+    * behave as in the reference. */
+  private case object Single extends Grouping(Nil) {
+    def jobKey: Seq[Column] = Nil
+    def key(id: Column): Seq[Column] = Nil
+    def bounds(v: JobHistoryViews): DataFrame = v.bounds
+    def withBounds(df: DataFrame, v: JobHistoryViews): DataFrame =
+      df.crossJoin(broadcast(bounds(v)))
+    def joinAgg(jobs: DataFrame, agg: DataFrame): DataFrame =
+      jobs.crossJoin(broadcast(agg))
+  }
+
+  /** One group per job: Job records keyed by JOBID, tasks and attempts
+    * by the job their id embeds ([[jobIdOf]]), bounds joined on the
+    * key. */
+  private case object PerJob extends Grouping(Seq("job_id")) {
+    def jobKey: Seq[Column] = Seq(col("attrs").getItem("JOBID").as("job_id"))
+    def key(id: Column): Seq[Column] = Seq(jobIdOf(id).as("job_id"))
+    def bounds(v: JobHistoryViews): DataFrame = v.boundsPerJob
+    def withBounds(df: DataFrame, v: JobHistoryViews): DataFrame =
+      df.withColumn("job_id", jobIdOf(col("attempt_id")))
+        .join(broadcast(bounds(v)), keys)
+    def joinAgg(jobs: DataFrame, agg: DataFrame): DataFrame =
+      jobs.join(agg, keys, "left")
+  }
+
+  // ------------------------------------------------------------- summary
+
+  /** `-s` overview statistics as one typed row (bin/job_history:380-424;
+    * golden scalars README:25-28). Averages are fractional (Groovy
+    * BigDecimal division). Columns in the order `Cli -s` prints them. */
+  def summary(v: JobHistoryViews): DataFrame =
+    summaryBy(v, Single, withShuffle = true).select(
+      Seq("job_id", "job_name", "user", "job_status", "total_time",
+        "num_maps", "total_map_time", "all_maps_complete", "num_reduces",
+        "total_reduce_time", "total_shuffle_time", "avg_map_time",
+        "avg_shuffle_time", "avg_reduce_time").map(col): _*)
+
   /** Fleet summary: the `-s` statistics per job over a multi-job event
-    * stream (job-level fields from Job records keyed by JOBID; task
-    * aggregates keyed through the id-embedded job).
-    *
-    * Unlike the single-job [[summary]] (which reuses the dynamic-schema
-    * entity views), the fleet path reads a FIXED set of attribute keys
-    * — so every last-write-wins merge is a conditional `max_by`
-    * aggregate, not an attrs explode. At fleet scale the explode is
-    * the dominant cost: merging all attrs of 36 M task records
-    * multiplies them ~10× before two groupBys; the conditional
-    * aggregates read each record once with map-side combine. Same
-    * semantics (LWW per key = last record CARRYING the key), guarded
-    * by MultiLogSpec's equality with the single-log golden summary. */
-  def summaryPerJob(v: JobHistoryViews): DataFrame = {
+    * stream, one row per JOBID, ordered by job id. */
+  def summaryPerJob(v: JobHistoryViews): DataFrame =
+    summaryBy(v, PerJob, withShuffle = false).select(
+      Seq("job_id", "job_name", "user", "job_status", "total_time",
+        "num_maps", "total_map_time", "num_reduces", "total_reduce_time",
+        "avg_map_time", "avg_reduce_time").map(col): _*)
+      .orderBy(col("job_id"))
+
+  /** The summary aggregation over a grouping. It reads a fixed set of
+    * attribute keys, so every last-write-wins merge (LWW per key = last
+    * record CARRYING the key) is a conditional `max_by` aggregate over
+    * the cached events, not an explode of every attribute map.
+    * `withShuffle` adds `total_shuffle_time` / `avg_shuffle_time`,
+    * which need the final reduce attempts' SHUFFLE_FINISHED: a task ⋈
+    * final attempt ⋈ attempt times join that only [[summary]] prints. */
+  private def summaryBy(v: JobHistoryViews, g: Grouping,
+      withShuffle: Boolean): DataFrame = {
     val scale = v.scale
     def a(k: String): Column = col("attrs").getItem(k)
-    def lastWhen(cond: Column, value: Column): Column =
-      max_by(when(cond, value), when(cond, col("line_no")))
-
-    val jobs = v.events.filter(col("event") === "Job")
-      .groupBy(a("JOBID").as("job_id"))
-      .agg(
-        lastWhen(a("JOBNAME").isNotNull, a("JOBNAME")).as("job_name"),
-        lastWhen(a("USER").isNotNull, a("USER")).as("user"),
-        lastWhen(a("JOB_STATUS").isNotNull, a("JOB_STATUS")).as("job_status"),
-        lastWhen(a("LAUNCH_TIME").isNotNull, a("LAUNCH_TIME")).as("launch"),
-        lastWhen(a("FINISH_TIME").isNotNull, a("FINISH_TIME")).as("finish"))
-      .select(col("job_id"), col("job_name"), col("user"), col("job_status"),
-        ((col("finish").cast("long") - col("launch").cast("long")) / scale)
-          .cast("long").as("total_time"))
-
-    // per-task LWW of START/FINISH per record-level TASK_TYPE (the
-    // reference routes each record by its own type), then per-job
-    // counts/sums — two groupBys on keys that embed the job id
-    def isType(t: String): Column = a("TASK_TYPE") === t
-    val perTask = v.events.filter(col("event") === "Task")
-      .groupBy(a("TASKID").as("task_id"))
-      .agg(
-        lastWhen(isType("MAP") && a("START_TIME").isNotNull,
-          a("START_TIME")).as("m_start"),
-        lastWhen(isType("MAP") && a("FINISH_TIME").isNotNull,
-          a("FINISH_TIME")).as("m_finish"),
-        lastWhen(isType("REDUCE") && a("START_TIME").isNotNull,
-          a("START_TIME")).as("r_start"),
-        lastWhen(isType("REDUCE") && a("FINISH_TIME").isNotNull,
-          a("FINISH_TIME")).as("r_finish"))
+    def last(cond: Column, k: String): Column =
+      max_by(when(cond, a(k)), when(cond, col("line_no")))
+    def lastOf(k: String): Column = last(a(k).isNotNull, k)
     def elapsed(s: String, f: String): Column =
       ((col(f).cast("long") - col(s).cast("long")) / scale).cast("long")
-    val taskAgg = perTask
-      .groupBy(jobIdOf(col("task_id")).as("job_id"))
-      .agg(
-        count(when(col("m_finish").isNotNull, 1)).as("num_maps"),
-        sum(when(col("m_finish").isNotNull,
-          elapsed("m_start", "m_finish"))).as("total_map_time"),
-        count(when(col("r_finish").isNotNull, 1)).as("num_reduces"),
-        sum(when(col("r_finish").isNotNull,
-          elapsed("r_start", "r_finish"))).as("total_reduce_time"))
 
-    jobs.join(taskAgg, Seq("job_id"), "left")
-      .withColumn("avg_map_time",
-        col("total_map_time").cast("double") / col("num_maps"))
-      .withColumn("avg_reduce_time",
-        col("total_reduce_time").cast("double") / col("num_reduces"))
-      .orderBy(col("job_id"))
-  }
+    // under PerJob the group key is the job id itself
+    val jobId = if (g.keys.isEmpty) Seq(lastOf("JOBID").as("job_id")) else Nil
+    val jobFields = jobId ++ Seq(
+      lastOf("JOBNAME").as("job_name"), lastOf("USER").as("user"),
+      lastOf("JOB_STATUS").as("job_status"),
+      lastOf("LAUNCH_TIME").as("launch"), lastOf("FINISH_TIME").as("finish"))
+    val jobs = v.events.filter(col("event") === "Job")
+      .groupBy(g.jobKey: _*).agg(jobFields.head, jobFields.tail: _*)
+      .select(col("job_id"), col("job_name"), col("user"), col("job_status"),
+        elapsed("launch", "finish").as("total_time"))
 
-  /** Classified (job_id, phase, lo, hi) interval rows for a multi-job
-    * stream — each attempt joined to its own job's bounds (keyed
-    * through the id-embedded job, J5 becomes a keyed join instead of a
-    * scalar broadcast). Shared by both fleet timeline variants.
-    * Memoized + persisted per views object like [[intervals]]: the
-    * sweep-line variant consumes it twice (+1/-1 deltas), and without
-    * the memo every execution re-ran the whole classification join
-    * stack (measured: jh_timeline_per_job warm 2.5 s vs the global
-    * sweep's 0.5 s at the same output). Attempt-cardinality rows. */
-  private val intervalsPerJobMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[JobHistoryViews, DataFrame]())
+    // per-task LWW of START/FINISH per record-level TASK_TYPE (the
+    // reference routes each record by its own type, so SETUP/CLEANUP
+    // Task records count as neither)
+    def typed(t: String, k: String): Column =
+      last(a("TASK_TYPE") === t && a(k).isNotNull, k)
+    val perTask = v.events.filter(col("event") === "Task")
+      .groupBy(a("TASKID").as("task_id"))
+      .agg(typed("MAP", "START_TIME").as("m_start"),
+        typed("MAP", "FINISH_TIME").as("m_finish"),
+        typed("REDUCE", "START_TIME").as("r_start"),
+        typed("REDUCE", "FINISH_TIME").as("r_finish"))
+    val mapDone = col("m_finish").isNotNull
+    val reduceDone = col("r_finish").isNotNull
+    // totalShuffleTime += (long)(shuffle_u - START_TIME/scale): the
+    // reference subtracts an exact quotient from the already-truncated
+    // attempt unit, then truncates — ≡ (shuffle_u*scale - start_ms) DIV scale
+    val shuffle =
+      if (withShuffle) Seq(sum(when(reduceDone,
+        ((col("shuffle_u") * scale - col("r_start").cast("long")) / scale)
+          .cast("long"))).as("total_shuffle_time"))
+      else Nil
+    val taskFields = Seq(
+      count(when(mapDone, 1)).as("num_maps"),
+      sum(when(mapDone, elapsed("m_start", "m_finish"))).as("total_map_time"),
+      max(when(mapDone, expr(s"CAST(m_finish AS BIGINT) DIV $scale")))
+        .as("all_maps_complete"),
+      count(when(reduceDone, 1)).as("num_reduces"),
+      sum(when(reduceDone, elapsed("r_start", "r_finish")))
+        .as("total_reduce_time")) ++ shuffle
+    val tasks =
+      if (withShuffle) perTask.join(shuffleOfFinal(v), Seq("task_id"), "left")
+      else perTask
+    val taskAgg = tasks.groupBy(g.key(col("task_id")): _*)
+      .agg(taskFields.head, taskFields.tail: _*)
 
-  private def intervalsPerJob(v: JobHistoryViews): DataFrame = {
-    val df = intervalsPerJobMemo.computeIfAbsent(v, v2 => computeIntervalsPerJob(v2))
-    // re-pin per call: clearCache() drops the registration permanently
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  private def computeIntervalsPerJob(v: JobHistoryViews): DataFrame = {
-    val bounds = v.boundsPerJob
-    val finals = v.finalAttempts.select(col("attempt_id"), lit(true).as("is_final"))
-    def rel(c: Column): Column = c - col("submit_u")
-    def clamp0(c: Column): Column = greatest(lit(0L), c)
-    def capped(c: Column): Column = rel(least(c, col("finish_u")))
-
-    def withBounds(df: DataFrame): DataFrame =
-      df.withColumn("job_id", jobIdOf(col("attempt_id")))
-        .join(bounds, Seq("job_id"))
-
-    val maps = withBounds(v.mapAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left"))
-      .select(col("job_id"),
-        when(col("is_final"), "maps").otherwise("waste").as("phase"),
-        clamp0(rel(col("start_u"))).as("lo"), capped(col("end_u")).as("hi"))
-    val reduces = withBounds(v.reduceAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left"))
-    val finalReduces = reduces.filter(col("is_final") &&
-      col("shuffle_u").isNotNull && col("sort_u").isNotNull)
-      .select(col("job_id"), explode(array(
-        struct(lit("shuffle").as("phase"), clamp0(rel(col("start_u"))).as("lo"),
-          capped(col("shuffle_u")).as("hi")),
-        struct(lit("merge").as("phase"), clamp0(rel(col("shuffle_u"))).as("lo"),
-          capped(col("sort_u")).as("hi")),
-        struct(lit("reduce").as("phase"), clamp0(rel(col("sort_u"))).as("lo"),
-          capped(col("end_u")).as("hi")))).as("iv"))
-      .select(col("job_id"), col("iv.phase"), col("iv.lo"), col("iv.hi"))
-    val wastedReduces = reduces.filter(col("is_final").isNull)
-      .select(col("job_id"), lit("waste").as("phase"),
-        clamp0(rel(col("start_u"))).as("lo"), capped(col("end_u")).as("hi"))
-
-    maps.unionByName(finalReduces).unionByName(wastedReduces)
-      .filter(col("lo") <= col("hi") && col("lo").isNotNull)
-  }
-
-  private def spinePerJob(v: JobHistoryViews): DataFrame =
-    v.boundsPerJob.filter(col("finish_u") >= col("submit_u"))
-      .select(col("job_id"), explode(
-        sequence(lit(0L), col("finish_u") - col("submit_u"))).as("time"))
-
-  /** Fleet timeline by interval expansion: the dense spine is generated
-    * per job; one scan, shuffles keyed by (job_id, …). O(Σ interval
-    * lengths) generated rows — see [[timelinePerJobSweepLine]] for the
-    * fleet-scale path. */
-  def timelinePerJob(v: JobHistoryViews): DataFrame = {
-    val expanded = intervalsPerJob(v).select(col("job_id"), col("phase"),
-      explode(sequence(col("lo"), col("hi"))).as("time"))
-    val aggs = phaseNames.map(p =>
-      coalesce(sum(when(col("phase") === p, 1L)), lit(0L)).as(p))
-    val counts = expanded.groupBy(col("job_id"), col("time"))
-      .agg(aggs.head, aggs.tail: _*)
-    spinePerJob(v).join(counts, Seq("job_id", "time"), "left")
-      .select(col("job_id") +: col("time") +:
-        phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("job_id"), col("time"))
-  }
-
-  /** Fleet timeline via sweep-line running sums — [[timelineSweepLine]]
-    * per job: only the O(attempts) sparse delta rows per (job, phase)
-    * go through the sort-based window, each step then fills its span by
-    * a map-only explode — O(duration × 5) generated rows per job
-    * instead of expansion's O(Σ interval lengths) (~100× fewer on the
-    * Pig fixture, whose interval slots sum to ~15 M against a 26 k
-    * spine). Windows partition on (job_id, phase), so a 10,000-job
-    * fleet gives the sort 50,000 independent tiny partitions — the
-    * shape that scales out with executors. Identical output to
-    * [[timelinePerJob]] (asserted in MultiLogSpec). */
-  def timelinePerJobSweepLine(v: JobHistoryViews): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val deltas = intervalsPerJob(v)
-      .select(col("job_id"), col("phase"), explode(array(
-        struct(col("lo").as("time"), lit(1L).as("d")),
-        struct((col("hi") + 1).as("time"), lit(-1L).as("d")))).as("td"))
-      .groupBy(col("job_id"), col("phase"), col("td.time").as("time"))
-      .agg(sum(col("td.d")).as("d"))
-    val w = Window.partitionBy(col("job_id"), col("phase")).orderBy(col("time"))
-    // as in timelineSweepLine: every surviving step (running != 0) has
-    // a next delta in its own (job, phase) partition, and the closing
-    // -1 sits at hi+1 <= job duration + 1, so no bound scalar is
-    // needed; the per-job spine left join clamps degenerate logs
-    val steps = deltas
-      .withColumn("running", sum(col("d"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("next_t", lead(col("time"), 1).over(w))
-      .filter(col("running") =!= 0)
-      .select(col("job_id"), col("phase"), col("running"),
-        col("time").as("lo"), (col("next_t") - 1).as("hi"))
-    val filled = steps.select(col("job_id"), col("phase"), col("running"),
-      explode(sequence(col("lo"), col("hi"))).as("time"))
-    val aggs = phaseNames.map(p =>
-      coalesce(sum(when(col("phase") === p, col("running"))), lit(0L)).as(p))
-    val counts = filled.groupBy(col("job_id"), col("time"))
-      .agg(aggs.head, aggs.tail: _*)
-    spinePerJob(v).join(counts, Seq("job_id", "time"), "left")
-      .select(col("job_id") +: col("time") +:
-        phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("job_id"), col("time"))
+    def avg(total: String, n: String): Column =
+      col(total).cast("double") / col(n)
+    val summed = g.joinAgg(jobs, taskAgg)
+      .withColumn("avg_map_time", avg("total_map_time", "num_maps"))
+      .withColumn("avg_reduce_time", avg("total_reduce_time", "num_reduces"))
+    if (withShuffle)
+      summed.withColumn("avg_shuffle_time",
+        avg("total_shuffle_time", "num_reduces"))
+    else summed
   }
 
   // ------------------------------------------------------------ timeline
 
   /** T3: each attempt projected to (phase, lo, hi) interval rows on the
-    * 0-based scaled spine. Canonical semantics (SURVEY §2.10): Groovy
-    * CLI phases + inclusive upper ends, CGI's `Math.max(0, lo)` clamp;
-    * final attempts drive the real-work series, non-final attempts are
-    * waste (J2/J3 as a left join on attempt_id).
+    * 0-based scaled spine of its job. Canonical semantics (SURVEY
+    * §2.10): Groovy CLI phases + inclusive upper ends, CGI's
+    * `Math.max(0, lo)` clamp; final attempts drive the real-work series,
+    * non-final attempts are waste (J2/J3 as a left join on attempt_id).
+    * Columns: the grouping's keys, then `phase, lo, hi`.
     *
-    * Memoized + persisted per views object (same weak-key pattern as
-    * the per-session event cache): the sweep-line timeline references
-    * it twice (+1/-1 deltas) and `timeline`/`timelineSweepLine` share
-    * one classification pass instead of re-joining finals per caller.
-    * Attempt-cardinality rows — tiny relative to the raw log. */
-  private val intervalsMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[JobHistoryViews, DataFrame]())
+    * Memoized and persisted on the views object, one entry per grouping
+    * (dropped by [[JobHistoryViews.release]]): the sweep-line timeline
+    * reads it twice (+1/-1 deltas), and both timelines share one
+    * classification pass. Attempt-cardinality rows. */
+  private def intervals(v: JobHistoryViews, g: Grouping): DataFrame =
+    v.pinned(g)(classify(v, g))
 
-  private[jobhistory] def intervals(v: JobHistoryViews): DataFrame = {
-    val df = intervalsMemo.computeIfAbsent(v, v2 => computeIntervals(v2))
-    // re-pin per call: clearCache() drops the registration permanently
-    // (same failure mode as the events cache — see Views.ensureCached)
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
+  /** The single-log classification: (phase, lo, hi). */
+  private[jobhistory] def intervals(v: JobHistoryViews): DataFrame =
+    intervals(v, Single)
 
-  /** Drop the memoized interval classification (and its persisted
-    * blocks) for a retiring views object — the counterpart of
-    * [[JobHistoryViews.release]] for short-lived (e.g. per-request)
-    * views, where waiting for the weak map to collect would leave the
-    * cache registration pinned indefinitely. */
-  private[jobhistory] def releaseIntervals(v: JobHistoryViews): Unit = {
-    val df = intervalsMemo.remove(v)
-    if (df != null) df.unpersist()
-    val pj = intervalsPerJobMemo.remove(v)
-    if (pj != null) pj.unpersist()
-  }
-
-  private def computeIntervals(v: JobHistoryViews): DataFrame = {
+  private def classify(v: JobHistoryViews, g: Grouping): DataFrame = {
     val finals = v.finalAttempts.select(col("attempt_id"), lit(true).as("is_final"))
+    val k = g.keys.map(col)
     def rel(c: Column): Column = c - col("submit_u")
     def clamp0(c: Column): Column = greatest(lit(0L), c)
     def capped(c: Column): Column = rel(least(c, col("finish_u")))
+    def classified(times: DataFrame): DataFrame =
+      g.withBounds(times
+        .filter(col("start_u").isNotNull && col("end_u").isNotNull)
+        .join(finals, Seq("attempt_id"), "left"), v)
 
-    val maps = v.mapAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left")
-      .crossJoin(broadcast(v.bounds))
-      .select(
+    val maps = classified(v.mapAttemptTimes)
+      .select(k ++ Seq(
         when(col("is_final"), "maps").otherwise("waste").as("phase"),
         clamp0(rel(col("start_u"))).as("lo"),
-        capped(col("end_u")).as("hi"))
+        capped(col("end_u")).as("hi")): _*)
 
-    val reduces = v.reduceAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left")
-      .crossJoin(broadcast(v.bounds))
+    val reduces = classified(v.reduceAttemptTimes)
     // shuffle_u/sort_u must exist for the phase split: with NULLs,
     // greatest/least would silently produce [start, job_finish] /
     // [0, …] intervals (the reference NPEs loudly here — we drop the
     // malformed attempt instead, documented divergence)
     val finalReduces = reduces.filter(col("is_final") &&
       col("shuffle_u").isNotNull && col("sort_u").isNotNull)
-      .select(explode(array(
+      .select(k :+ explode(array(
         struct(lit("shuffle").as("phase"),
           clamp0(rel(col("start_u"))).as("lo"),
           capped(col("shuffle_u")).as("hi")),
@@ -404,48 +293,99 @@ object Reports {
           capped(col("sort_u")).as("hi")),
         struct(lit("reduce").as("phase"),
           clamp0(rel(col("sort_u"))).as("lo"),
-          capped(col("end_u")).as("hi")))).as("iv"))
-      .select(col("iv.phase"), col("iv.lo"), col("iv.hi"))
+          capped(col("end_u")).as("hi")))).as("iv"): _*)
+      .select(k ++ Seq(col("iv.phase"), col("iv.lo"), col("iv.hi")): _*)
     val wastedReduces = reduces.filter(col("is_final").isNull)
-      .select(lit("waste").as("phase"),
+      .select(k ++ Seq(lit("waste").as("phase"),
         clamp0(rel(col("start_u"))).as("lo"),
-        capped(col("end_u")).as("hi"))
+        capped(col("end_u")).as("hi")): _*)
 
     maps.unionByName(finalReduces).unionByName(wastedReduces)
       .filter(col("lo") <= col("hi") && col("lo").isNotNull)
   }
 
-  private def spine(v: JobHistoryViews): DataFrame =
-    v.bounds
-      // inverted bounds (clock-skewed log) → empty timeline, not a
-      // descending sequence
+  /** The dense 0..duration time axis of each job. Inverted bounds
+    * (clock-skewed log) give an empty axis, not a descending sequence. */
+  private def spine(v: JobHistoryViews, g: Grouping): DataFrame =
+    g.bounds(v)
       .filter(col("finish_u") >= col("submit_u"))
-      .select(explode(
-        sequence(lit(0L), col("finish_u") - col("submit_u"))).as("time"))
+      .select(g.keys.map(col) :+ explode(
+        sequence(lit(0L), col("finish_u") - col("submit_u"))).as("time"): _*)
 
   private val phaseNames = Seq("maps", "shuffle", "merge", "reduce", "waste")
 
-  /** T4: pivot phase rows to the wide `maps/shuffle/merge/reduce/waste`
-    * series via conditional aggregation (static pivot — no extra pass
-    * to discover pivot values). */
-  private def widen(perPhase: DataFrame, counts: Column): DataFrame = {
+  /** T4: sum `counts` of (keys, time, phase) rows into the wide
+    * `maps/shuffle/merge/reduce/waste` series via conditional
+    * aggregation (static pivot — no extra pass to discover pivot
+    * values), then zero-fill it onto the spine. */
+  private def onSpine(v: JobHistoryViews, g: Grouping, perPhase: DataFrame,
+      counts: Column): DataFrame = {
+    val keys = (g.keys :+ "time").map(col)
     val aggs = phaseNames.map(p =>
       coalesce(sum(when(col("phase") === p, counts)), lit(0L)).as(p))
-    perPhase.groupBy(col("time")).agg(aggs.head, aggs.tail: _*)
+    val wide = perPhase.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    spine(v, g).join(wide, g.keys :+ "time", "left")
+      .select(keys ++ phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
+      .orderBy(keys: _*)
   }
 
-  /** T1-T4 by interval expansion — the reference's exact dataflow
-    * (one row per (attempt, t)). Best when the scaled job duration is
-    * modest; O(duration × attempts) rows otherwise — see
-    * [[timelineSweepLine]] for the wide-spine path. */
-  def timeline(v: JobHistoryViews): DataFrame = {
-    val expanded = intervals(v)
-      .select(col("phase"), explode(sequence(col("lo"), col("hi"))).as("time"))
-    val counts = widen(expanded, lit(1L))
-    spine(v).join(counts, Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
+  /** T1-T4 by interval expansion — the reference's exact dataflow (one
+    * row per (attempt, t)). O(Σ interval lengths) generated rows; see
+    * [[sweepLine]] for the wide-spine path. */
+  private def expansion(v: JobHistoryViews, g: Grouping): DataFrame = {
+    val k = g.keys.map(col)
+    val expanded = intervals(v, g).select(k ++ Seq(col("phase"),
+      explode(sequence(col("lo"), col("hi"))).as("time")): _*)
+    onSpine(v, g, expanded, lit(1L))
   }
+
+  /** W2: the same timeline via sweep-line running sums — +1 at lo,
+    * -1 at hi+1, cumulative per (job, phase). Only the O(attempts)
+    * sparse delta rows go through the sort-based window; each resulting
+    * step `[time, next_time)` then fills its span of the spine by a
+    * map-only `sequence` explode, so a month-long job at millisecond
+    * scale sorts exactly as many rows as a minute-long one. Identical
+    * output to [[expansion]]. */
+  private def sweepLine(v: JobHistoryViews, g: Grouping): DataFrame = {
+    val k = g.keys.map(col)
+    // both deltas of an interval in ONE pass over the classification
+    // (a union of two selects would run the classification twice when
+    // its cache is cold)
+    val deltas = intervals(v, g)
+      .select(k ++ Seq(col("phase"), explode(array(
+        struct(col("lo").as("time"), lit(1L).as("d")),
+        struct((col("hi") + 1).as("time"), lit(-1L).as("d")))).as("td")): _*)
+      .groupBy(k ++ Seq(col("phase"), col("td.time").as("time")): _*)
+      .agg(sum(col("td.d")).as("d"))
+    val w = Window.partitionBy(k :+ col("phase"): _*).orderBy(col("time"))
+    // running value + the half-open step it holds for. No bound scalar
+    // needed: each interval contributes a +1 and a matching -1, so the
+    // highest delta per (job, phase) always closes to running = 0 —
+    // every surviving step has a next delta, and the closing -1 sits at
+    // hi+1 <= duration+1 (intervals are clamped to the job bounds), so
+    // no step outruns the spine. The spine left join remains the outer
+    // clamp for degenerate (empty/inverted-bounds) logs.
+    val steps = deltas
+      .withColumn("running", sum(col("d"))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("next_t", lead(col("time"), 1).over(w))
+      .filter(col("running") =!= 0)
+    val filled = steps.select(k ++ Seq(col("phase"), col("running"),
+      explode(sequence(col("time"), col("next_t") - 1)).as("time")): _*)
+    onSpine(v, g, filled, col("running"))
+  }
+
+  /** The single-log timeline by interval expansion. */
+  def timeline(v: JobHistoryViews): DataFrame = expansion(v, Single)
+
+  /** The single-log timeline by sweep line; equals [[timeline]]. */
+  def timelineSweepLine(v: JobHistoryViews): DataFrame = sweepLine(v, Single)
+
+  /** Fleet timeline by interval expansion, `job_id` first. */
+  def timelinePerJob(v: JobHistoryViews): DataFrame = expansion(v, PerJob)
+
+  /** Fleet timeline by sweep line; equals [[timelinePerJob]]. */
+  def timelinePerJobSweepLine(v: JobHistoryViews): DataFrame = sweepLine(v, PerJob)
 
   /** Batch completion of the STREAMING timeline: pivots a converged
     * `(time, phase, count)` table (the [[Streaming.timelineStream]]
@@ -456,49 +396,5 @@ object Reports {
     * the stream's own output, including the zero rows its
     * retractions net out to. */
   def timelineFromPhaseCounts(v: JobHistoryViews, perPhase: DataFrame): DataFrame =
-    spine(v).join(widen(perPhase, col("count")), Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
-
-  /** W2: the same timeline via sweep-line running sums — +1 at lo,
-    * -1 at hi+1, cumulative per phase. Only the O(attempts) sparse
-    * delta rows go through the sort-based window (5 tiny phase
-    * partitions); each resulting step `[time, next_time)` then fills
-    * its span of the spine by a map-only `sequence` explode, so a
-    * month-long job at millisecond scale sorts exactly as many rows as
-    * a minute-long one. Identical output to [[timeline]] (asserted in
-    * tests). */
-  def timelineSweepLine(v: JobHistoryViews): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // both deltas of an interval in ONE pass over the classification
-    // (a union of two selects would run the parse → classify pipeline
-    // twice whenever the events cache is cold, e.g. under the bench's
-    // per-query clearCache isolation)
-    val deltas = intervals(v)
-      .select(col("phase"), explode(array(
-        struct(col("lo").as("time"), lit(1L).as("d")),
-        struct((col("hi") + 1).as("time"), lit(-1L).as("d")))).as("td"))
-      .groupBy(col("phase"), col("td.time").as("time"))
-      .agg(sum(col("td.d")).as("d"))
-    val w = Window.partitionBy(col("phase")).orderBy(col("time"))
-    // running value + the half-open step it holds for. No bound scalar
-    // needed: each interval contributes a +1 and a matching -1, so the
-    // highest delta per phase always closes to running = 0 — every
-    // surviving step has a next delta, and the closing -1 sits at
-    // hi+1 <= duration+1 (intervals are clamped to the job bounds), so
-    // no step outruns the spine. The spine left join below remains the
-    // outer clamp for degenerate (empty/inverted-bounds) logs.
-    val steps = deltas
-      .withColumn("running", sum(col("d"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("next_t", lead(col("time"), 1).over(w))
-      .filter(col("running") =!= 0)
-      .select(col("phase"), col("running"), col("time").as("lo"),
-        (col("next_t") - 1).as("hi"))
-    val filled = steps.select(col("phase"), col("running"),
-      explode(sequence(col("lo"), col("hi"))).as("time"))
-    spine(v).join(widen(filled, col("running")), Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
-  }
+    onSpine(v, Single, perPhase, col("count"))
 }

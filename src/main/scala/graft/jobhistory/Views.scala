@@ -52,13 +52,29 @@ final class JobHistoryViews(
   }
   ensureCached()
 
+  /** The reports' interval classification, one per job grouping,
+    * persisted alongside the event cache. */
+  private val classifications =
+    new java.util.concurrent.ConcurrentHashMap[Reports.Grouping, DataFrame]()
+
+  /** `classify`, memoized per grouping and persisted for the life of
+    * this views object. Re-pinned on every call, because `clearCache()`
+    * drops a registration permanently (as in [[ensureCached]]). */
+  private[jobhistory] def pinned(g: Reports.Grouping)(classify: => DataFrame): DataFrame = {
+    val df = classifications.computeIfAbsent(g, _ => classify)
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df
+  }
+
   /** Unpin everything this views object cached (the event cache and
-    * the memoized interval classification). Session-scoped views live
-    * for the session and never call this; short-lived views — one HTTP
-    * request, one CLI run — must, or each one leaks a cache
-    * registration the weak maps cannot reclaim. */
+    * the memoized classifications). Session-scoped views live for the
+    * session and never call this; short-lived views — one HTTP
+    * request, one CLI run — must, or each one leaks its cache
+    * registrations. */
   def release(): Unit = {
-    Reports.releaseIntervals(this)
+    classifications.values.forEach(_.unpersist())
+    classifications.clear()
     ev.unpersist()
   }
 
@@ -83,22 +99,18 @@ final class JobHistoryViews(
       .groupBy($"k").agg(max_by($"v", $"line_no").as("v"))
       .agg(map_from_entries(collect_list(struct($"k", $"v"))).as("attrs"))
 
-  /** A4: global job bounds in scaled units. `finish_u` only from Job
-    * records carrying FINISH_TIME but not SUBMIT_TIME (the reference's
-    * if/else-if, bin/job_history:236-240). */
-  lazy val bounds: DataFrame =
-    ev.filter($"event" === "Job")
-      .agg(
-        u(lastWhen(a("SUBMIT_TIME").isNotNull, a("SUBMIT_TIME")))
-          .as("submit_u"),
-        u(lastWhen(a("SUBMIT_TIME").isNull && a("FINISH_TIME").isNotNull,
-          a("FINISH_TIME"))).as("finish_u"))
+  /** A4: job bounds in scaled units. `finish_u` only from Job records
+    * carrying FINISH_TIME but not SUBMIT_TIME (the reference's
+    * if/else-if, bin/job_history:236-240). [[bounds]]: one row over
+    * all Job records; [[boundsPerJob]]: one row per JOBID (the fleet
+    * variant). */
+  lazy val bounds: DataFrame = boundsBy()
 
-  /** [[bounds]] keyed by JOBID — the fleet (multi-job) variant with the
-    * same if/else-if semantics. */
-  lazy val boundsPerJob: DataFrame =
+  lazy val boundsPerJob: DataFrame = boundsBy(a("JOBID").as("job_id"))
+
+  private def boundsBy(key: Column*): DataFrame =
     ev.filter($"event" === "Job")
-      .groupBy(a("JOBID").as("job_id"))
+      .groupBy(key: _*)
       .agg(
         u(lastWhen(a("SUBMIT_TIME").isNotNull, a("SUBMIT_TIME")))
           .as("submit_u"),

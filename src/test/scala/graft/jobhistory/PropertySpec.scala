@@ -90,12 +90,25 @@ class PropertySpec extends SparkSpec {
     * times: attempts may start before job submit (CGI clamp) and
     * finish after job finish (cap), reduce finishes sometimes omit
     * SHUFFLE/SORT (dropped from the phase series), and non-SUCCESS
-    * attempts land in waste. */
+    * attempts land in waste. Each task has a Task START record and
+    * usually a Task FINISH record (an unfinished task counts in no
+    * summary total); map task 0 always finishes. */
   private def genJob(j: Int): Gen[Seq[Ev]] = {
-    val jid = f"job_1111_$j%04d"
+    val jid = jobId(j)
     def taskId(kind: String, t: Int) = f"task_1111_$j%04d_${kind}_$t%06d"
     def attId(kind: String, t: Int, i: Int) =
       f"attempt_1111_$j%04d_${kind}_$t%06d_$i"
+    def taskRecords(kind: String, t: Int, start: Long, finish: Long,
+        status: String, finished: Boolean): (Ev, Seq[Ev]) = {
+      val tpe = if (kind == "m") "MAP" else "REDUCE"
+      (Ev("Task", Seq("TASKID" -> taskId(kind, t), "TASK_TYPE" -> tpe,
+        "START_TIME" -> s"${start * 1000}")),
+        if (finished) Seq(Ev("Task", Seq("TASKID" -> taskId(kind, t),
+          "TASK_TYPE" -> tpe, "TASK_STATUS" -> status,
+          "FINISH_TIME" -> s"${finish * 1000}")))
+        else Nil)
+    }
+    val finishedGen = Gen.frequency(5 -> Gen.const(true), 1 -> Gen.const(false))
     for {
       submit <- Gen.choose(10L, 20L)
       dur <- Gen.choose(40L, 100L)
@@ -109,16 +122,26 @@ class PropertySpec extends SparkSpec {
             len <- Gen.choose(1L, 80L) // can finish after job finish
             st <- Gen.oneOf("SUCCESS", "SUCCESS", "FAILED")
           } yield (off, len, st))
-        } yield specs.zipWithIndex.flatMap { case ((off, len, status), i) =>
-          val start = math.max(1L, submit + off)
-          Seq(
-            Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
-              "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
-              "START_TIME" -> s"${start * 1000}")),
-            Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
-              "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
-              "TASK_STATUS" -> status,
-              "FINISH_TIME" -> s"${(start + len) * 1000}")))
+          finished <- if (t == 0) Gen.const(true) else finishedGen
+        } yield {
+          val times = specs.map { case (off, len, _) =>
+            val start = math.max(1L, submit + off)
+            (start, start + len)
+          }
+          val atts = specs.zip(times).zipWithIndex.flatMap {
+            case (((_, _, status), (start, end)), i) =>
+              Seq(
+                Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
+                  "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
+                  "START_TIME" -> s"${start * 1000}")),
+                Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
+                  "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
+                  "TASK_STATUS" -> status,
+                  "FINISH_TIME" -> s"${end * 1000}")))
+          }
+          val (open, close) = taskRecords("m", t, times.head._1,
+            times.map(_._2).max, specs.last._3, finished)
+          (open +: atts) ++ close
         }
       }).map(_.flatten)
       redTasks <- Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((0 until nRed).map { t =>
@@ -129,6 +152,7 @@ class PropertySpec extends SparkSpec {
           redLen <- Gen.choose(1L, 40L)
           withPhases <- Gen.frequency(4 -> Gen.const(true), 1 -> Gen.const(false))
           status <- Gen.oneOf("SUCCESS", "SUCCESS", "FAILED")
+          finished <- finishedGen
         } yield {
           val start = submit + off
           val sf = start + shufLen
@@ -140,27 +164,38 @@ class PropertySpec extends SparkSpec {
             (if (withPhases) Seq("SHUFFLE_FINISHED" -> s"${sf * 1000}",
               "SORT_FINISHED" -> s"${so * 1000}")
             else Nil)
-          Seq(
+          val (open, close) = taskRecords("r", t, start, e, status, finished)
+          Seq(open,
             Ev("ReduceAttempt", Seq("TASKID" -> taskId("r", t),
               "TASK_ATTEMPT_ID" -> attId("r", t, 0),
               "START_TIME" -> s"${start * 1000}")),
-            Ev("ReduceAttempt", finishAttrs))
+            Ev("ReduceAttempt", finishAttrs)) ++ close
         }
       }).map(_.flatten)
     } yield
-      Ev("Job", Seq("JOBID" -> jid, "SUBMIT_TIME" -> s"${submit * 1000}")) +:
+      Seq(Ev("Job", Seq("JOBID" -> jid, "JOBNAME" -> s"name$j", "USER" -> "u",
+          "SUBMIT_TIME" -> s"${submit * 1000}")),
+        Ev("Job", Seq("JOBID" -> jid, "LAUNCH_TIME" -> s"${(submit + 1) * 1000}"))) ++
         (mapTasks ++ redTasks) :+
         Ev("Job", Seq("JOBID" -> jid, "JOB_STATUS" -> "SUCCESS",
           "FINISH_TIME" -> s"${(submit + dur) * 1000}"))
   }
 
-  private def genFleetLog(nJobs: Int): Gen[Seq[Ev]] =
-    Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((1 to nJobs).map(genJob)).map(_.flatten)
+  private def jobId(j: Int): String = f"job_1111_$j%04d"
+
+  /** Per-job logs of one generated fleet, in job order. */
+  private def genJobs(nJobs: Int): Gen[Seq[Seq[Ev]]] =
+    Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((1 to nJobs).map(genJob))
+
+  private def genFleetLog(nJobs: Int): Gen[Seq[Ev]] = genJobs(nJobs).map(_.flatten)
+
+  private def views(evs: Seq[Ev]): JobHistoryViews =
+    new JobHistoryViews(spark,
+      JobHistoryReader.readString(spark, evs.map(_.render + " .\n").mkString))
 
   test("generated fleet logs: sweep-line timelines equal interval expansion") {
     forAll(genFleetLog(3), samples = 6) { evs =>
-      val log = evs.map(_.render + " .\n").mkString
-      val v = new JobHistoryViews(spark, JobHistoryReader.readString(spark, log))
+      val v = views(evs)
       try {
         // single-job surface (global bounds over all Job records)
         val a = Reports.timeline(v).collect().map(_.toSeq)
@@ -171,6 +206,43 @@ class PropertySpec extends SparkSpec {
         val pb = Reports.timelinePerJobSweepLine(v).collect().map(_.toSeq)
         assert(pb.toSeq === pa.toSeq)
       } finally v.release()
+    }
+  }
+
+  test("generated fleet logs: each job's fleet rows equal the single-log reports on its records alone") {
+    val shared = Seq("job_id", "job_name", "user", "job_status", "total_time",
+      "num_maps", "total_map_time", "num_reduces", "total_reduce_time",
+      "avg_map_time", "avg_reduce_time")
+    // a job's rows of a fleet timeline, job_id dropped
+    def slice(rows: Array[org.apache.spark.sql.Row], jid: String) =
+      rows.filter(_.getString(0) == jid).map(_.toSeq.tail).toSeq
+    val jobs = genJobs(3)
+    (1 to 4).foreach { i =>
+      val perJob = jobs.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      val fleet = views(perJob.flatten)
+      try {
+        val summaries = Reports.summaryPerJob(fleet).collect()
+        val timelines = Reports.timelinePerJob(fleet).collect()
+        val sweeps = Reports.timelinePerJobSweepLine(fleet).collect()
+        assert(summaries.map(_.getAs[String]("job_id")).toSeq ===
+          perJob.indices.map(j => jobId(j + 1)))
+        perJob.zipWithIndex.foreach { case (evs, j) =>
+          val jid = jobId(j + 1)
+          val one = views(evs)
+          try {
+            val single = Reports.summary(one).collect()
+            assert(single.length === 1)
+            assert(single.head.getAs[Long]("num_maps") > 0L, "non-trivial")
+            assert(shared.map(single.head.getAs[Any](_)) ===
+              shared.map(summaries(j).getAs[Any](_)), s"summary of $jid")
+            assert(slice(timelines, jid) ===
+              Reports.timeline(one).collect().map(_.toSeq).toSeq, s"timeline of $jid")
+            assert(slice(sweeps, jid) ===
+              Reports.timelineSweepLine(one).collect().map(_.toSeq).toSeq,
+              s"sweep-line timeline of $jid")
+          } finally one.release()
+        }
+      } finally fleet.release()
     }
   }
 

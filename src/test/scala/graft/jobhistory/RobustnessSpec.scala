@@ -5,12 +5,30 @@ import graft.SparkSpec
 /** Malformed-input behavior and scale-parameter plumbing. */
 class RobustnessSpec extends SparkSpec {
 
+  private def capture(cfg: Cli.Config): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      Cli.run(spark, cfg)
+    }
+    out.toString("UTF-8")
+  }
+
+  /** `Cli -s` output for `log`, written to a temporary file. */
+  private def cliSummary(log: String): String = {
+    val f = java.nio.file.Files.createTempFile("summary", ".txt")
+    try {
+      java.nio.file.Files.writeString(f, log)
+      capture(Cli.Config(input = f.toString, report = "s"))
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  private val garbageLog = "complete garbage line .\n" +
+    "NoAttrsEvent .\n" +
+    "Task TASKID=\"t1\" TASK_TYPE=\"MAP\" START_TIME=\"1000\" .\n" +
+    "key=value-without-quotes .\n"
+
   test("garbage records parse to empty attr maps without throwing") {
-    val log = "complete garbage line .\n" +
-      "NoAttrsEvent .\n" +
-      "Task TASKID=\"t1\" TASK_TYPE=\"MAP\" START_TIME=\"1000\" .\n" +
-      "key=value-without-quotes .\n"
-    val df = JobHistoryReader.readString(spark, log)
+    val df = JobHistoryReader.readString(spark, garbageLog)
     val rows = df.collect()
     assert(rows.length === 4)
     val byEvent = rows.map(r =>
@@ -21,7 +39,10 @@ class RobustnessSpec extends SparkSpec {
     // reports over a log with no Job/attempt records don't throw
     val v = new JobHistoryViews(spark, df)
     assert(Reports.mapDetails(v).count() === 1L)
-    assert(Reports.summary(v).collect().length <= 1)
+    // the single-log summary is a global aggregate: one row, even
+    // with no Job record (Cli -s prints its head)
+    assert(Reports.summary(v).collect().length === 1)
+    assert(cliSummary(garbageLog).contains("Job details:"))
   }
 
   test("CLI: dangling or malformed flags fail with a usage error, not a stack bug") {
@@ -37,23 +58,13 @@ class RobustnessSpec extends SparkSpec {
         "LAUNCH_TIME=\"1000\" FINISH_TIME=\"5000\" JOB_STATUS=\"FAILED\" .\n" +
       "Task TASKID=\"task_1_0001_m_000000\" TASK_TYPE=\"MAP\" " +
         "START_TIME=\"1000\" FINISH_TIME=\"2000\" .\n"
-    val f = java.nio.file.Files.createTempFile("failedjob", ".txt")
-    java.nio.file.Files.writeString(f, log)
-    def capture(cfg: Cli.Config): String = {
-      val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-        Cli.run(spark, cfg)
-      }
-      out.toString("UTF-8")
-    }
-    val failed = capture(Cli.Config(input = f.toString, report = "s"))
+    val failed = cliSummary(log)
     assert(failed.contains("Job details:"))
     assert(failed.contains("JOB_STATUS") || failed.contains("job_status"))
     assert(!failed.contains("Overview statistics"))
     // a SUCCESS job still gets the full overview
     val ok = capture(Cli.Config(input = Fixtures.pig, report = "s"))
     assert(ok.contains("Overview statistics"))
-    java.nio.file.Files.delete(f)
   }
 
   test("malformedRecords surfaces attribute-less records for inspection") {
@@ -73,6 +84,9 @@ class RobustnessSpec extends SparkSpec {
     assert(v.events.count() === 0L)
     assert(Reports.mapDetails(v).count() === 0L)
     assert(v.finalAttempts.count() === 0L)
+    assert(Reports.summary(v).collect().length === 1)
+    assert(Reports.summaryPerJob(v).count() === 0L)
+    assert(cliSummary("").contains("Job details:"))
   }
 
   test("scale parameter: CLI (1e6) and CGI (100) units flow through the reports") {
