@@ -121,7 +121,7 @@ object Reports {
     * over no records) and the one-row bounds as a broadcast cross join.
     * Ids are never parsed, so any ids and logs without a Job record
     * behave as in the reference. */
-  private case object Single extends Grouping(Nil) {
+  private[jobhistory] case object Single extends Grouping(Nil) {
     def jobKey: Seq[Column] = Nil
     def key(id: Column): Seq[Column] = Nil
     def bounds(v: JobHistoryViews): DataFrame = v.bounds
@@ -134,7 +134,7 @@ object Reports {
   /** One group per job: Job records keyed by JOBID, tasks and attempts
     * by the job their id embeds ([[jobIdOf]]), bounds joined on the
     * key. */
-  private case object PerJob extends Grouping(Seq("job_id")) {
+  private[jobhistory] case object PerJob extends Grouping(Seq("job_id")) {
     def jobKey: Seq[Column] = Seq(col("attrs").getItem("JOBID").as("job_id"))
     def key(id: Column): Seq[Column] = Seq(jobIdOf(id).as("job_id"))
     def bounds(v: JobHistoryViews): DataFrame = v.boundsPerJob
@@ -250,9 +250,9 @@ object Reports {
     * Columns: the grouping's keys, then `phase, lo, hi`.
     *
     * Memoized and persisted on the views object, one entry per grouping
-    * (dropped by [[JobHistoryViews.release]]): the sweep-line timeline
-    * reads it twice (+1/-1 deltas), and both timelines share one
-    * classification pass. Attempt-cardinality rows. */
+    * (dropped by [[JobHistoryViews.release]]): both timelines and
+    * `intervals(v)` read the same classification. Attempt-cardinality
+    * rows. */
   private def intervals(v: JobHistoryViews, g: Grouping): DataFrame =
     v.pinned(g)(classify(v, g))
 
@@ -260,47 +260,36 @@ object Reports {
   private[jobhistory] def intervals(v: JobHistoryViews): DataFrame =
     intervals(v, Single)
 
-  private def classify(v: JobHistoryViews, g: Grouping): DataFrame = {
+  /** One pass over the attempts of both kinds: one join with the finals,
+    * one with the bounds, then each attempt row explodes to 0, 1 or 3
+    * intervals — a map attempt to `maps` (final) or `waste`, a non-final
+    * reduce to `waste`, a final reduce to `shuffle, merge, reduce`. A
+    * final reduce lacking SHUFFLE/SORT_FINISHED yields none: with NULLs,
+    * greatest/least would silently produce [start, job_finish] / [0, …]
+    * intervals (the reference NPEs loudly here — we drop the malformed
+    * attempt instead, documented divergence). */
+  private[jobhistory] def classify(v: JobHistoryViews, g: Grouping): DataFrame = {
     val finals = v.finalAttempts.select(col("attempt_id"), lit(true).as("is_final"))
     val k = g.keys.map(col)
     def rel(c: Column): Column = c - col("submit_u")
-    def clamp0(c: Column): Column = greatest(lit(0L), c)
-    def capped(c: Column): Column = rel(least(c, col("finish_u")))
-    def classified(times: DataFrame): DataFrame =
-      g.withBounds(times
-        .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-        .join(finals, Seq("attempt_id"), "left"), v)
-
-    val maps = classified(v.mapAttemptTimes)
-      .select(k ++ Seq(
-        when(col("is_final"), "maps").otherwise("waste").as("phase"),
-        clamp0(rel(col("start_u"))).as("lo"),
-        capped(col("end_u")).as("hi")): _*)
-
-    val reduces = classified(v.reduceAttemptTimes)
-    // shuffle_u/sort_u must exist for the phase split: with NULLs,
-    // greatest/least would silently produce [start, job_finish] /
-    // [0, …] intervals (the reference NPEs loudly here — we drop the
-    // malformed attempt instead, documented divergence)
-    val finalReduces = reduces.filter(col("is_final") &&
-      col("shuffle_u").isNotNull && col("sort_u").isNotNull)
-      .select(k :+ explode(array(
-        struct(lit("shuffle").as("phase"),
-          clamp0(rel(col("start_u"))).as("lo"),
-          capped(col("shuffle_u")).as("hi")),
-        struct(lit("merge").as("phase"),
-          clamp0(rel(col("shuffle_u"))).as("lo"),
-          capped(col("sort_u")).as("hi")),
-        struct(lit("reduce").as("phase"),
-          clamp0(rel(col("sort_u"))).as("lo"),
-          capped(col("end_u")).as("hi")))).as("iv"): _*)
+    def iv(phase: Column, lo: Column, hi: Column): Column =
+      struct(phase.as("phase"), greatest(lit(0L), rel(lo)).as("lo"),
+        rel(least(hi, col("finish_u"))).as("hi"))
+    val (start, shuffle, sort, end) =
+      (col("start_u"), col("shuffle_u"), col("sort_u"), col("end_u"))
+    val perAttempt =
+      when(col("event") === "MapAttempt", array(iv(
+        when(col("is_final"), "maps").otherwise("waste"), start, end)))
+        .when(col("is_final").isNull, array(iv(lit("waste"), start, end)))
+        .when(shuffle.isNotNull && sort.isNotNull, array(
+          iv(lit("shuffle"), start, shuffle),
+          iv(lit("merge"), shuffle, sort),
+          iv(lit("reduce"), sort, end)))
+    g.withBounds(v.attemptTimes
+      .filter(start.isNotNull && end.isNotNull)
+      .join(finals, Seq("attempt_id"), "left"), v)
+      .select(k :+ explode(perAttempt).as("iv"): _*)
       .select(k ++ Seq(col("iv.phase"), col("iv.lo"), col("iv.hi")): _*)
-    val wastedReduces = reduces.filter(col("is_final").isNull)
-      .select(k ++ Seq(lit("waste").as("phase"),
-        clamp0(rel(col("start_u"))).as("lo"),
-        capped(col("end_u")).as("hi")): _*)
-
-    maps.unionByName(finalReduces).unionByName(wastedReduces)
       .filter(col("lo") <= col("hi") && col("lo").isNotNull)
   }
 

@@ -123,41 +123,44 @@ final class JobHistoryViews(
     * Groovy-canonical; bin/job_history:242-244). Records *without* a
     * TASK_TYPE are kept, as in the reference (null != "SETUP") — a bare
     * `!isin` would evaluate to NULL and silently drop them. */
-  lazy val mapAttemptEvents: DataFrame =
-    ev.filter($"event" === "MapAttempt" &&
-      coalesce(!a("TASK_TYPE").isin("SETUP", "CLEANUP"), lit(true)))
+  private val isMapAttempt: Column = $"event" === "MapAttempt" &&
+    coalesce(!a("TASK_TYPE").isin("SETUP", "CLEANUP"), lit(true))
+  private val isReduceAttempt: Column = $"event" === "ReduceAttempt"
 
-  lazy val reduceAttemptEvents: DataFrame =
-    ev.filter($"event" === "ReduceAttempt")
+  lazy val mapAttemptEvents: DataFrame = ev.filter(isMapAttempt)
+  lazy val reduceAttemptEvents: DataFrame = ev.filter(isReduceAttempt)
+  private lazy val attemptEvents: DataFrame = ev.filter(isMapAttempt || isReduceAttempt)
 
-  /** Start/finish records are distinct rows merged per attempt (J4 as a
-    * groupBy, no self-join needed). A start record is one carrying
-    * START_TIME; a finish record carries FINISH_TIME without START_TIME
-    * (reference if/else-if). P7: zero scaled start times are ignored. */
-  private def attemptTimes(df: DataFrame, extra: Seq[(String, Column)]): DataFrame = {
+  /** Per attempt of either kind, keyed by `(event, attempt_id)`, in one
+    * aggregation over one filtered scan. Start/finish records are
+    * distinct rows merged per attempt (J4 as a groupBy, no self-join
+    * needed): a start record carries START_TIME; a finish record carries
+    * FINISH_TIME without START_TIME (reference if/else-if). P7: zero
+    * scaled start times are ignored. `shuffle_u`/`sort_u` come from the
+    * SHUFFLE_FINISHED / SORT_FINISHED of the finish records, which only
+    * reduce attempts carry (bin/job_history:310-313). */
+  lazy val attemptTimes: DataFrame = {
     val isStart = a("START_TIME").isNotNull && u(a("START_TIME")) =!= 0
     val isFinish = a("START_TIME").isNull && a("FINISH_TIME").isNotNull
-    val base = Seq(
-      "task_id" -> lastWhen(lit(true), a("TASKID")),
-      "start_u" -> u(lastWhen(isStart, a("START_TIME"))),
-      "end_u" -> u(lastWhen(isFinish, a("FINISH_TIME"))))
-    df.groupBy(a("TASK_ATTEMPT_ID").as("attempt_id"))
-      .agg((base ++ extra).map { case (n, c) => c.as(n) }.head,
-        (base ++ extra).map { case (n, c) => c.as(n) }.tail: _*)
+    def finishU(k: String): Column = u(lastWhen(isFinish && a(k).isNotNull, a(k)))
+    attemptEvents.groupBy($"event", a("TASK_ATTEMPT_ID").as("attempt_id"))
+      .agg(lastWhen(lit(true), a("TASKID")).as("task_id"),
+        u(lastWhen(isStart, a("START_TIME"))).as("start_u"),
+        u(lastWhen(isFinish, a("FINISH_TIME"))).as("end_u"),
+        finishU("SHUFFLE_FINISHED").as("shuffle_u"),
+        finishU("SORT_FINISHED").as("sort_u"))
   }
 
-  lazy val mapAttemptTimes: DataFrame = attemptTimes(mapAttemptEvents, Nil)
+  /** One kind's slice of [[attemptTimes]]. The filter is on a grouping
+    * key, so the optimizer pushes it below the aggregate: each slice
+    * plans as a single-kind aggregation, unused columns pruned. */
+  private def attemptsOf(event: String, extra: String*): DataFrame =
+    attemptTimes.filter($"event" === event)
+      .select((Seq("attempt_id", "task_id", "start_u", "end_u") ++ extra).map(col): _*)
 
-  /** Reduce attempts also carry SHUFFLE_FINISHED / SORT_FINISHED on
-    * their finish records (bin/job_history:310-313). */
-  lazy val reduceAttemptTimes: DataFrame = {
-    val isFinish = a("START_TIME").isNull && a("FINISH_TIME").isNotNull
-    attemptTimes(reduceAttemptEvents, Seq(
-      "shuffle_u" -> u(lastWhen(isFinish && a("SHUFFLE_FINISHED").isNotNull,
-        a("SHUFFLE_FINISHED"))),
-      "sort_u" -> u(lastWhen(isFinish && a("SORT_FINISHED").isNotNull,
-        a("SORT_FINISHED")))))
-  }
+  lazy val mapAttemptTimes: DataFrame = attemptsOf("MapAttempt")
+  lazy val reduceAttemptTimes: DataFrame =
+    attemptsOf("ReduceAttempt", "shuffle_u", "sort_u")
 
   /** A3: per task, the attempt id of the last SUCCESS finish record —
     * across map AND reduce attempts (one shared finalAttempt map,
@@ -165,8 +168,7 @@ final class JobHistoryViews(
   lazy val finalAttempts: DataFrame = {
     val isSuccessFinish = a("START_TIME").isNull &&
       a("FINISH_TIME").isNotNull && a("TASK_STATUS") === "SUCCESS"
-    mapAttemptEvents.unionByName(reduceAttemptEvents)
-      .filter(isSuccessFinish)
+    attemptEvents.filter(isSuccessFinish)
       .groupBy(a("TASKID").as("task_id"))
       .agg(max_by(a("TASK_ATTEMPT_ID"), $"line_no").as("attempt_id"))
   }

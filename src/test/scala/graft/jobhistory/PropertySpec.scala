@@ -47,6 +47,63 @@ class PropertySpec extends SparkSpec {
     (tasks.toMap, attempts.toMap, finals)
   }
 
+  /** T3 interpreted over a single-job log (scale 1000): the reference's
+    * ordered pass sets the bounds, each attempt's times and the final
+    * attempt per task; then every attempt with a start and an end yields
+    * its (phase, lo, hi) intervals on the job's 0-based spine, start
+    * clamped at 0 and end capped at the job finish. */
+  private def interpretIntervals(evs: Seq[Ev]): Seq[(String, Long, Long)] = {
+    def u(ms: String): Long = ms.toLong / 1000
+    case class Att(start: Option[Long] = None, end: Option[Long] = None,
+        shuffle: Option[Long] = None, sort: Option[Long] = None)
+    var submit, finish = Option.empty[Long]
+    val atts = scala.collection.mutable.LinkedHashMap.empty[(String, String), Att]
+    var finals = Map.empty[String, String]
+    evs.foreach { e =>
+      val a = e.attrs.toMap
+      val isFinish = !a.contains("START_TIME") && a.contains("FINISH_TIME")
+      val ignored = e.event == "MapAttempt" &&
+        a.get("TASK_TYPE").exists(Set("SETUP", "CLEANUP"))
+      e.event match {
+        case "Job" =>
+          if (a.contains("SUBMIT_TIME")) submit = Some(u(a("SUBMIT_TIME")))
+          else if (a.contains("FINISH_TIME")) finish = Some(u(a("FINISH_TIME")))
+        case "MapAttempt" | "ReduceAttempt" if !ignored =>
+          val k = (e.event, a("TASK_ATTEMPT_ID"))
+          val cur = atts.getOrElse(k, Att())
+          atts(k) =
+            if (a.contains("START_TIME"))
+              if (u(a("START_TIME")) != 0) cur.copy(start = Some(u(a("START_TIME"))))
+              else cur
+            else if (isFinish)
+              cur.copy(end = Some(u(a("FINISH_TIME"))),
+                shuffle = a.get("SHUFFLE_FINISHED").map(u).orElse(cur.shuffle),
+                sort = a.get("SORT_FINISHED").map(u).orElse(cur.sort))
+            else cur
+          if (isFinish && a.get("TASK_STATUS").contains("SUCCESS"))
+            finals += a("TASKID") -> a("TASK_ATTEMPT_ID")
+        case _ =>
+      }
+    }
+    for {
+      s <- submit.toSeq
+      f <- finish.toSeq
+      ((event, id), Att(Some(start), Some(end), shuffle, sort)) <- atts.toSeq
+      // one copy per task the attempt is final for, one if it is final for none
+      n = finals.values.count(_ == id)
+      _ <- 1 to math.max(1, n)
+      (phase, lo, hi) <- (event, n > 0, shuffle, sort) match {
+        case ("MapAttempt", fin, _, _) => Seq((if (fin) "maps" else "waste", start, end))
+        case (_, false, _, _) => Seq(("waste", start, end))
+        case (_, true, Some(sh), Some(so)) =>
+          Seq(("shuffle", start, sh), ("merge", sh, so), ("reduce", so, end))
+        case _ => Nil
+      }
+      iv = (phase, math.max(0L, lo - s), math.min(hi, f) - s)
+      if iv._2 <= iv._3
+    } yield iv
+  }
+
   private val genLog: Gen[Seq[Ev]] = for {
     nTasks <- Gen.choose(1, 4)
     evs <- Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((0 until nTasks).map { t =>
@@ -90,9 +147,13 @@ class PropertySpec extends SparkSpec {
     * times: attempts may start before job submit (CGI clamp) and
     * finish after job finish (cap), reduce finishes sometimes omit
     * SHUFFLE/SORT (dropped from the phase series), and non-SUCCESS
-    * attempts land in waste. Each task has a Task START record and
-    * usually a Task FINISH record (an unfinished task counts in no
-    * summary total); map task 0 always finishes. */
+    * attempts land in waste. Reduce tasks retry: FAILED, KILLED or
+    * (superseded) SUCCESS attempts may precede the last one. Some map
+    * attempts carry no TASK_TYPE (kept), and each job has SETUP and
+    * CLEANUP tasks whose MapAttempt records every view ignores. Each
+    * task has a Task START record and usually a Task FINISH record (an
+    * unfinished task counts in no summary total); map task 0 always
+    * finishes. */
   private def genJob(j: Int): Gen[Seq[Ev]] = {
     val jid = jobId(j)
     def taskId(kind: String, t: Int) = f"task_1111_$j%04d_${kind}_$t%06d"
@@ -121,20 +182,22 @@ class PropertySpec extends SparkSpec {
             off <- Gen.choose(-15L, 60L) // can start before submit
             len <- Gen.choose(1L, 80L) // can finish after job finish
             st <- Gen.oneOf("SUCCESS", "SUCCESS", "FAILED")
-          } yield (off, len, st))
+            typed <- Gen.frequency(4 -> Gen.const(true), 1 -> Gen.const(false))
+          } yield (off, len, st, typed))
           finished <- if (t == 0) Gen.const(true) else finishedGen
         } yield {
-          val times = specs.map { case (off, len, _) =>
+          val times = specs.map { case (off, len, _, _) =>
             val start = math.max(1L, submit + off)
             (start, start + len)
           }
           val atts = specs.zip(times).zipWithIndex.flatMap {
-            case (((_, _, status), (start, end)), i) =>
+            case (((_, _, status, typed), (start, end)), i) =>
+              val tpe = if (typed) Seq("TASK_TYPE" -> "MAP") else Nil
               Seq(
-                Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
+                Ev("MapAttempt", tpe ++ Seq(
                   "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
                   "START_TIME" -> s"${start * 1000}")),
-                Ev("MapAttempt", Seq("TASK_TYPE" -> "MAP",
+                Ev("MapAttempt", tpe ++ Seq(
                   "TASKID" -> taskId("m", t), "TASK_ATTEMPT_ID" -> attId("m", t, i),
                   "TASK_STATUS" -> status,
                   "FINISH_TIME" -> s"${end * 1000}")))
@@ -146,37 +209,62 @@ class PropertySpec extends SparkSpec {
       }).map(_.flatten)
       redTasks <- Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((0 until nRed).map { t =>
         for {
-          off <- Gen.choose(0L, 40L)
-          shufLen <- Gen.choose(1L, 20L)
-          sortLen <- Gen.choose(1L, 15L)
-          redLen <- Gen.choose(1L, 40L)
-          withPhases <- Gen.frequency(4 -> Gen.const(true), 1 -> Gen.const(false))
-          status <- Gen.oneOf("SUCCESS", "SUCCESS", "FAILED")
+          nAtt <- Gen.choose(1, 3)
+          // earlier attempts: failed, killed, or a SUCCESS a later one supersedes
+          earlier <- Gen.listOfN(nAtt - 1, Gen.oneOf("FAILED", "KILLED", "SUCCESS"))
+          last <- Gen.oneOf("SUCCESS", "SUCCESS", "FAILED")
+          specs <- Gen.listOfN(nAtt, for {
+            off <- Gen.choose(0L, 40L)
+            shufLen <- Gen.choose(1L, 20L)
+            sortLen <- Gen.choose(1L, 15L)
+            redLen <- Gen.choose(1L, 40L)
+            withPhases <- Gen.frequency(4 -> Gen.const(true), 1 -> Gen.const(false))
+          } yield (off, shufLen, sortLen, redLen, withPhases))
           finished <- finishedGen
         } yield {
-          val start = submit + off
-          val sf = start + shufLen
-          val so = sf + sortLen
-          val e = so + redLen
-          val finishAttrs = Seq("TASKID" -> taskId("r", t),
-            "TASK_ATTEMPT_ID" -> attId("r", t, 0), "TASK_STATUS" -> status,
-            "FINISH_TIME" -> s"${e * 1000}") ++
-            (if (withPhases) Seq("SHUFFLE_FINISHED" -> s"${sf * 1000}",
-              "SORT_FINISHED" -> s"${so * 1000}")
-            else Nil)
-          val (open, close) = taskRecords("r", t, start, e, status, finished)
-          Seq(open,
-            Ev("ReduceAttempt", Seq("TASKID" -> taskId("r", t),
-              "TASK_ATTEMPT_ID" -> attId("r", t, 0),
-              "START_TIME" -> s"${start * 1000}")),
-            Ev("ReduceAttempt", finishAttrs)) ++ close
+          val atts = specs.zip(earlier :+ last).zipWithIndex.map {
+            case (((off, shufLen, sortLen, redLen, withPhases), status), i) =>
+              val start = submit + off
+              val sf = start + shufLen
+              val so = sf + sortLen
+              val e = so + redLen
+              val finishAttrs = Seq("TASKID" -> taskId("r", t),
+                "TASK_ATTEMPT_ID" -> attId("r", t, i), "TASK_STATUS" -> status,
+                "FINISH_TIME" -> s"${e * 1000}") ++
+                (if (withPhases) Seq("SHUFFLE_FINISHED" -> s"${sf * 1000}",
+                  "SORT_FINISHED" -> s"${so * 1000}")
+                else Nil)
+              (start, e, Seq(
+                Ev("ReduceAttempt", Seq("TASKID" -> taskId("r", t),
+                  "TASK_ATTEMPT_ID" -> attId("r", t, i),
+                  "START_TIME" -> s"${start * 1000}")),
+                Ev("ReduceAttempt", finishAttrs)))
+          }
+          val (open, close) = taskRecords("r", t, atts.map(_._1).min,
+            atts.map(_._2).max, last, finished)
+          (open +: atts.flatMap(_._3)) ++ close
         }
       }).map(_.flatten)
+      // SETUP and CLEANUP tasks, numbered after the map tasks
+      aux = Seq("SETUP" -> (submit + 1), "CLEANUP" -> (submit + dur - 1))
+        .zipWithIndex.flatMap { case ((tpe, at), i) =>
+          val t = nMap + i
+          val ids = Seq("TASK_TYPE" -> tpe, "TASKID" -> taskId("m", t),
+            "TASK_ATTEMPT_ID" -> attId("m", t, 0))
+          Seq(
+            Ev("Task", Seq("TASKID" -> taskId("m", t), "TASK_TYPE" -> tpe,
+              "START_TIME" -> s"${at * 1000}")),
+            Ev("MapAttempt", ids :+ ("START_TIME" -> s"${at * 1000}")),
+            Ev("MapAttempt", ids ++ Seq(
+              "TASK_STATUS" -> "SUCCESS", "FINISH_TIME" -> s"${(at + 1) * 1000}")),
+            Ev("Task", Seq("TASKID" -> taskId("m", t), "TASK_TYPE" -> tpe,
+              "TASK_STATUS" -> "SUCCESS", "FINISH_TIME" -> s"${(at + 1) * 1000}")))
+        }
     } yield
       Seq(Ev("Job", Seq("JOBID" -> jid, "JOBNAME" -> s"name$j", "USER" -> "u",
           "SUBMIT_TIME" -> s"${submit * 1000}")),
         Ev("Job", Seq("JOBID" -> jid, "LAUNCH_TIME" -> s"${(submit + 1) * 1000}"))) ++
-        (mapTasks ++ redTasks) :+
+        (aux.take(4) ++ mapTasks ++ redTasks ++ aux.drop(4)) :+
         Ev("Job", Seq("JOBID" -> jid, "JOB_STATUS" -> "SUCCESS",
           "FINISH_TIME" -> s"${(submit + dur) * 1000}"))
   }
@@ -244,6 +332,22 @@ class PropertySpec extends SparkSpec {
         }
       } finally fleet.release()
     }
+  }
+
+  test("generated jobs: interval classification equals the T3 interpreter") {
+    val phases = scala.collection.mutable.Set.empty[String]
+    forAll(genJob(1), samples = 12) { evs =>
+      val v = views(evs)
+      try {
+        val got = Reports.intervals(v).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+        val want = interpretIntervals(evs)
+        assert(got.sorted === want.sorted)
+        phases ++= want.map(_._1)
+      } finally v.release()
+    }
+    assert(phases === Set("maps", "shuffle", "merge", "reduce", "waste"),
+      "every phase generated")
   }
 
   test("generated logs: Spark views agree with the reference interpreter") {
